@@ -7,7 +7,8 @@ import numpy as np
 import pytest
 
 from xapian_spark.pipeline.flac import (
-    _BitW, _crc8, _crc16, decode_flac, encode_flac, is_flac,
+    _Bits, _BitW, _crc8, _crc16, _utf8_encode, _utf8_number, decode_flac,
+    encode_flac, is_flac,
 )
 
 
@@ -29,6 +30,21 @@ def test_roundtrip_waveforms_bit_exact():
         rate, gch, pcm = decode_flac(blob)
         assert (rate, gch) == (8000, ch)
         assert pcm == s.tobytes()
+
+
+@pytest.mark.parametrize("n,width", [
+    (127, 1), (128, 2), (2047, 2), (2048, 3), (16383, 3), (16384, 3),
+    (65536, 4),
+])
+def test_utf8_coded_number_roundtrip(n, width):
+    """The coded frame number uses the shortest form whose payload
+    holds n: k >= 2 bytes carry 5k + 1 bits (11 bits in 2 bytes, 16 in
+    3, 21 in 4), so 2048..16383 need three bytes, not two."""
+    blob = _utf8_encode(n)
+    assert len(blob) == width
+    bits = _Bits(blob)
+    assert _utf8_number(bits) == n
+    assert bits.pos == len(blob)
 
 
 def test_edge_sizes_and_extremes():

@@ -2,7 +2,8 @@
 100 TB, asserted on the actual Catalyst plans.
 
 - term filters reach the parquet scan (PushedFilters / partition-range
-  pruning on the saved postings table)
+  pruning on the saved postings table, and on the chunks table under
+  a segment index's decoded postings view)
 - column pruning: scoring never reads the positions column; metadata
   aggregations over media tables never read the blob
 - the flat scoring path contains no Python UDF (BatchEvalPython) —
@@ -62,6 +63,36 @@ def test_flat_scoring_has_no_python_udf(disk_index):
     assert "ArrowEvalPython" not in plan
     # and the multi-term filter reaches the scan as one In() pushdown
     assert "In(term, [batch,scan,spark])" in plan
+
+
+@pytest.fixture(scope="module")
+def seg_index(spark, tmp_path_factory):
+    from xapian_spark.index.segments import build_segments
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    path = str(tmp_path_factory.mktemp("segplan"))
+    return build_segments(docs, path, n_segments=4, analyzer="simple")
+
+
+def _chunk_scan_filters(plan: str) -> str:
+    """PushedFilters of the formatted plan's scan over `chunks/`."""
+    scans = [b for b in plan.split("\n\n")
+             if "Scan parquet" in b and "/chunks]" in b]
+    assert len(scans) == 1, plan
+    return scans[0].split("PushedFilters:")[1].split("\n")[0]
+
+
+def test_segment_term_filter_pushed_below_decode(seg_index):
+    """A term filter over the decoded segment view — a caller's own or
+    the executor's for a query — prunes chunk rows at the Parquet scan,
+    so only those terms' chunks ever reach the decoder."""
+    view = seg_index.to_inverted_index()
+    terms = ["batch", "scan"]
+    for df in (view.postings.filter(F.col("term").isin(terms)),
+               Enquire(view).compile(ops.Or([ops.Term(t) for t in terms]))):
+        plan = _formatted(df)
+        assert "In(term, [batch,scan])" in _chunk_scan_filters(plan), plan
+        assert "MapInPandas" not in plan, plan
 
 
 def test_single_term_topk_no_shuffle(disk_index):

@@ -228,3 +228,40 @@ def test_positions_in_segment_index(spark, tmp_path):
     out = compact(seg, str(tmp_path / "pidx2"), n_segments=2)
     c = _pairs(Enquire(out.to_inverted_index()).get_mset(q, 0, 10))
     assert c == b
+
+
+def test_positions_null_without_keep_positions(seg_setup):
+    """keep_positions=False stores no pos_data, and the decoded view
+    says so with NULL positions on every row — exactly like the flat
+    build — not an empty list a phrase check would read as "absent"."""
+    docs, seg, _flat = seg_setup
+    flat = build_index(docs, analyzer="simple", keep_positions=False)
+    view = seg.to_inverted_index()
+    got = view.postings.groupBy(F.col("positions").isNull()).count()
+    want = flat.postings.groupBy(F.col("positions").isNull()).count()
+    assert [tuple(r) for r in got.collect()] == \
+        [tuple(r) for r in want.collect()] == \
+        [(True, flat.postings.count())]
+
+
+def test_delete_hides_doc_in_term_filtered_view(seg_setup, tmp_path):
+    """The tombstone anti-join still applies when the term filter is
+    pushed down to the chunks scan: a deleted doc's postings are gone
+    from the filtered view, the other docs' postings are untouched."""
+    from xapian_spark.index.segments import delete_documents
+
+    docs, _seg, _flat = seg_setup
+    seg = build_segments(docs, str(tmp_path / "didx"), n_segments=4,
+                         analyzer="simple")
+    terms = ["batch", "scan"]
+
+    def filtered(s):
+        return {(r["term"], r["doc_id"]) for r in
+                s.to_inverted_index().postings
+                .filter(F.col("term").isin(terms)).collect()}
+
+    before = filtered(seg)
+    victim = min(d for _t, d in before)
+    after = filtered(delete_documents(seg, [victim]))
+    assert after == {(t, d) for t, d in before if d != victim}
+    assert len(after) < len(before)

@@ -54,7 +54,8 @@ from pyspark.sql.types import (
 
 from xapian_spark.index.build import ANALYZERS, MAX_SAFE_TERM_LENGTH
 from xapian_spark.index.codec import (
-    CHUNK_TARGET_BYTES, CODEC_VERSION, encode_chunks, encode_positions,
+    CHUNK_TARGET_BYTES, CODEC_VERSION, decode_chunk, decode_positions,
+    encode_chunks, encode_positions,
 )
 
 DOCLEN_TERM = ""  # reserved pseudo-term whose chunks hold (doc_id, 0, doclen)
@@ -275,6 +276,48 @@ def _invert_segment(
     return pd.DataFrame(rows)
 
 
+_DECODED = ("struct<doc_id: array<long>, wdf: array<int>,"
+            " doclen: array<long>, positions: array<array<int>>>")
+
+
+def _decode_chunk_batch(data, pos_data):
+    """One Arrow batch of chunk rows → one struct of posting arrays per
+    chunk, straight from the codec's numpy output (no per-int Python;
+    Arrow's safe cast rejects a wdf past int32)."""
+    import pandas as pd
+
+    out = {"doc_id": [], "wdf": [], "doclen": [], "positions": []}
+    for blob, pos_blob in zip(data, pos_data):
+        ids, wdfs, dls = decode_chunk(blob)
+        out["doc_id"].append(ids)
+        out["wdf"].append(wdfs)
+        out["doclen"].append(dls)
+        out["positions"].append(
+            [None] * len(ids) if pos_blob is None
+            else decode_positions(pos_blob, len(ids)))
+    return pd.DataFrame(out)
+
+
+def _decode_chunks(chunks: DataFrame) -> DataFrame:
+    """Chunk rows → one row per posting
+    (term, seg_id, doc_id, wdf, doclen, positions).
+
+    A scalar Arrow UDF decodes each chunk to arrays and `inline`
+    explodes them, so the plan is Generate over ArrowEvalPython over
+    the scan — operators Catalyst pushes `term` predicates through,
+    unlike mapInPandas — and a filter on `term` above this frame
+    prunes chunk rows at the Parquet scan, before any decode runs."""
+    decode = F.pandas_udf(_decode_chunk_batch, _DECODED)
+    d = "_decoded"
+    return (chunks
+            .select("term", "seg_id",
+                    decode("data", "pos_data").alias(d))
+            .select("term", "seg_id", F.inline(F.arrays_zip(
+                f"{d}.doc_id", f"{d}.wdf", f"{d}.doclen",
+                f"{d}.positions"))
+                .alias("doc_id", "wdf", "doclen", "positions")))
+
+
 class SegmentIndex:
     """A chunk-encoded, segmented index on disk."""
 
@@ -459,44 +502,16 @@ class SegmentIndex:
 
     def to_postings(self) -> DataFrame:
         """Decode chunks → row-per-posting DataFrame
-        (term, doc_id, wdf, doclen, positions=NULL) — the flat
-        InvertedIndex layout. Lazily evaluated; a `term` filter above
-        it prunes chunk rows before any decode runs."""
-        from xapian_spark.index.codec import decode_chunk
+        (term, doc_id, wdf, doclen, positions) — the flat InvertedIndex
+        layout, minus tombstoned postings. `positions` is NULL when the
+        chunk stores none (an index built without keep_positions).
 
-        schema = ("term string, doc_id long, wdf int, doclen long,"
-                  " seg_id int, positions array<int>")
-
-        from xapian_spark.index.codec import decode_positions
-
-        def gen(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                out = {"term": [], "doc_id": [], "wdf": [],
-                       "doclen": [], "seg_id": [], "positions": []}
-                for term, seg, data, pd_ in zip(
-                        pdf["term"], pdf["seg_id"], pdf["data"],
-                        pdf["pos_data"]):
-                    ids, wdfs, dls = decode_chunk(bytes(data))
-                    out["term"].extend([term] * len(ids))
-                    out["doc_id"].extend(int(x) for x in ids)
-                    out["wdf"].extend(int(x) for x in wdfs)
-                    out["doclen"].extend(int(x) for x in dls)
-                    out["seg_id"].extend([int(seg)] * len(ids))
-                    if pd_ is None:
-                        out["positions"].extend([None] * len(ids))
-                    else:
-                        out["positions"].extend(
-                            [p.tolist() for p in decode_positions(
-                                bytes(pd_), len(ids))])
-                yield pd.DataFrame(out)
-
-        rows = (self.postings_chunks
-                .select("term", "seg_id", "data", "pos_data")
-                .mapInPandas(gen, schema))
-        rows = self._filter_tombstoned(rows)
-        return rows.drop("seg_id")
+        Lazily evaluated, and a `term` predicate above it (the
+        executor's `term IN (...)`) reaches the chunks Parquet scan:
+        only the query terms' chunks are read and decoded, each chunk
+        as a whole by a vectorized Arrow UDF (_decode_chunks)."""
+        rows = _decode_chunks(self.postings_chunks)
+        return self._filter_tombstoned(rows).drop("seg_id")
 
     def _filter_tombstoned(self, rows: DataFrame) -> DataFrame:
         """Drop tombstoned (doc_id, seg_id <= before_seg) rows — a
@@ -513,12 +528,15 @@ class SegmentIndex:
 
     def to_inverted_index(self, docs: Optional[DataFrame] = None):
         """Full-featured query view over the chunk storage: an
-        InvertedIndex whose postings decode on demand, so the entire
-        executor algebra (boolean trees, collapse, facets, expand,
-        every weighting scheme) runs against the segment index.
+        InvertedIndex whose postings (to_postings) decode on demand, so
+        the entire executor algebra (boolean trees, collapse, facets,
+        expand, every weighting scheme) runs against the segment index.
+        A query's `term IN (...)` prunes chunk rows at the Parquet scan,
+        so it decodes only its own terms' chunks, vectorized per chunk.
         Phrase/NEAR work when the index was built with
         keep_positions=True (positions ride in per-chunk pos_data,
-        the brass position-table analog)."""
+        the brass position-table analog); otherwise `positions` is
+        NULL on every posting, as in a flat build without them."""
         from xapian_spark.index.build import InvertedIndex
 
         postings = self.to_postings()
@@ -529,29 +547,9 @@ class SegmentIndex:
         """(doc_id, doclen) decoded straight from the doclen pseudo-term
         chunks — no full-postings decode, no shuffle (each doc's length
         lives in exactly one chunk of one segment)."""
-        from xapian_spark.index.codec import decode_chunk
-
-        def gen(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                ids_l, dl_l, seg_l = [], [], []
-                for seg, data in zip(pdf["seg_id"], pdf["data"]):
-                    ids, _w, dls = decode_chunk(bytes(data))
-                    ids_l.append(ids)
-                    dl_l.append(dls)
-                    seg_l.append(np.full(len(ids), int(seg),
-                                         dtype=np.int64))
-                if ids_l:
-                    yield pd.DataFrame({
-                        "doc_id": np.concatenate(ids_l),
-                        "doclen": np.concatenate(dl_l),
-                        "seg_id": np.concatenate(seg_l)})
-
-        rows = (self.doclen_chunks.select("seg_id", "data")
-                .mapInPandas(gen,
-                             "doc_id long, doclen long, seg_id long"))
-        return self._filter_tombstoned(rows).drop("seg_id")
+        rows = _decode_chunks(self.doclen_chunks)
+        return (self._filter_tombstoned(rows)
+                .select("doc_id", "doclen"))
 
 
 def compact(
@@ -573,45 +571,10 @@ def compact(
     head-term posting list (the same property the salted multipass
     merge of brass_compact.cc:679-730 buys).
     """
-    from xapian_spark.index.codec import decode_chunk
-
     spark = index.spark
     if not n_segments:
         n_segments = max(1, index.chunks.select("seg_id")
                          .distinct().count() // 4)
-
-    rows_schema = ("term string, doc_id long, wdf int, doclen long,"
-                   " seg_id int, src_seg int, positions array<int>")
-
-    nseg = n_segments
-
-    from xapian_spark.index.codec import decode_positions
-
-    def explode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"term": [], "doc_id": [], "wdf": [], "doclen": [],
-                   "seg_id": [], "src_seg": [], "positions": []}
-            for term, src, data, pd_ in zip(pdf["term"], pdf["seg_id"],
-                                            pdf["data"],
-                                            pdf["pos_data"]):
-                ids, wdfs, dls = decode_chunk(bytes(data))
-                out["term"].extend([term] * len(ids))
-                out["doc_id"].extend(int(x) for x in ids)
-                out["wdf"].extend(int(x) for x in wdfs)
-                out["doclen"].extend(int(x) for x in dls)
-                out["seg_id"].extend(
-                    int((x - 1) % nseg) if x >= 1 else int(x % nseg)
-                    for x in ids)
-                out["src_seg"].extend([int(src)] * len(ids))
-                if pd_ is None:
-                    out["positions"].extend([None] * len(ids))
-                else:
-                    out["positions"].extend(
-                        [p.tolist() for p in decode_positions(
-                            bytes(pd_), len(ids))])
-            yield pd.DataFrame(out)
 
     def reencode(batches):
         import pandas as pd
@@ -650,28 +613,23 @@ def compact(
                     pos += c.n
             yield pd.DataFrame(rows)
 
-    import time as _time
-
-    t0 = _time.time()
-    exploded = index.chunks.select("term", "seg_id", "data", "pos_data") \
-        .mapInPandas(explode, rows_schema)
-    # purge tombstoned postings: compact is where deletes are
-    # physically reclaimed (brass_compact's role for changesets)
-    tomb = index.tombstones()
-    if tomb is not None:
-        t = F.broadcast(tomb.select(
-            F.col("doc_id").alias("_t_doc"),
-            F.col("before_seg").alias("_t_seg")))
-        exploded = exploded.join(
-            t, (exploded["doc_id"] == t["_t_doc"])
-            & (exploded["src_seg"] <= t["_t_seg"]), "left_anti")
-    exploded = exploded.drop("src_seg")
+    t0 = time.time()
+    # purge tombstoned postings (against their SOURCE seg_id): compact
+    # is where deletes are physically reclaimed (brass_compact's role
+    # for changesets); then re-key each posting by its doc's NEW
+    # segment, (doc_id - 1) mod n_segments (doc_id 0 → segment 0)
+    doc = F.col("doc_id")
+    exploded = (index._filter_tombstoned(_decode_chunks(index.chunks))
+                .withColumn("seg_id", F.when(
+                    doc >= 1, F.pmod(doc - 1, F.lit(n_segments)))
+                    .otherwise(F.pmod(doc, F.lit(n_segments)))
+                    .cast("int")))
     (exploded
      .repartitionByRange(n_segments, "seg_id")
      .mapInPandas(reencode, CHUNKS_SCHEMA)
      .write.mode("overwrite").partitionBy("seg_id")
      .parquet(f"{out_path}/chunks"))
-    build_sec = _time.time() - t0
+    build_sec = time.time() - t0
 
     built = spark.read.parquet(f"{out_path}/chunks")
     man = (
@@ -865,8 +823,6 @@ def delete_documents(index: SegmentIndex, doc_ids: Iterable[int]
 
     Returns a fresh SegmentIndex view of the same path.
     """
-    from xapian_spark.index.codec import decode_chunk
-
     spark = index.spark
     ids = sorted({int(d) for d in doc_ids})
     cur_max = index.chunks.agg(F.max("seg_id")).head()[0]
