@@ -1470,7 +1470,7 @@ def q_posting_value_weight(spark, sf_dir):
     return _mset(spark, sf_dir, ops.AndMaybe(ops.Term("batch"), ps))
 
 
-# the batch workload shared by q_bm25_batch and its oracle:
+# the batch workload shared by q_wand_batch and its oracle:
 # (query_id, terms, op) — duplicate terms merge into wqf
 _BATCH_WORKLOAD = [
     ("b_or", ["batch", "scan", "spark"], "or"),
@@ -1487,30 +1487,14 @@ def q_wand_batch(spark, sf_dir):
     index's batch kernel (WandEnquire.get_mset_batch): per segment,
     each workload term's chunks decode ONCE and every query scores
     vectorized against the decoded arrays — decode amortization across
-    the workload's shared terms, no postings shuffle.  Results are
-    identical to bm25_batch (same oracle SQL)."""
+    the workload's shared terms, no postings shuffle.  This is the one
+    batch serving path: the bm25_batch entry runs it too, against the
+    same oracle SQL."""
     from xapian_spark.query.wand import WandEnquire
 
     wq = WandEnquire(_segment_index(spark, sf_dir))
     df = wq.get_mset_batch(
         [(q, t) for q, t, _o in _BATCH_WORKLOAD], 10,
-        ops_by_id={q: o for q, _t, o in _BATCH_WORKLOAD})
-    return df.select("query_id", "rank", "doc_id",
-                     F.round("score", 6).alias("score"))
-
-
-def q_bm25_batch(spark, sf_dir):
-    """The whole 6-query workload answered in ONE dataflow
-    (query/batch.py): broadcast query terms onto a single postings
-    scan, one candidate shuffle, per-query top-10 with the mset
-    tiebreak.  The reference answers queries one at a time
-    (matcher/multimatch.cc); batching is the Spark-native serving
-    path — per-query scores stay identical to Enquire.get_mset."""
-    from xapian_spark.query.batch import bm25_batch
-
-    df = bm25_batch(
-        _index(spark, sf_dir),
-        [(q, t) for q, t, _o in _BATCH_WORKLOAD], k=10,
         ops_by_id={q: o for q, _t, o in _BATCH_WORKLOAD})
     return df.select("query_id", "rank", "doc_id",
                      F.round("score", 6).alias("score"))
@@ -1918,7 +1902,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ccnet_buckets": q_ccnet_buckets,
         "paragraph_dedup": q_paragraph_dedup,
         "embed_neardup_lsh": q_embed_neardup_lsh,
-        "bm25_batch": q_bm25_batch,
+        "bm25_batch": q_wand_batch,
         "neardup_clusters": q_neardup_clusters,
         "streaming_commit": q_streaming_commit,
         "segment_manifest": q_segment_manifest,

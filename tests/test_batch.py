@@ -1,17 +1,18 @@
 """Batch query evaluation == the single-query path, per query.
 
-The contract (query/batch.py): one dataflow answering a whole query
-workload must reproduce Enquire.get_mset exactly — same docids, same
-BM25 scores, same tiebreak — for every query in the batch, for OR and
-AND semantics, wqf-merged duplicates, and unknown terms.
+The contract (WandEnquire.get_mset_batch, the one batch serving path):
+one job answering a whole query workload over the chunk-encoded
+segment index must reproduce Enquire.get_mset over the flat index
+exactly — same docids, same BM25 scores, same tiebreak — for every
+query in the batch, for OR and AND semantics, wqf-merged duplicates,
+and unknown terms.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from xapian_spark.query import ops
-from xapian_spark.query.batch import bm25_batch
 from xapian_spark.query.executor import Enquire
+from xapian_spark.query.wand import WandEnquire
 
 
 def _single(enq, terms, op, k):
@@ -28,9 +29,10 @@ def _single(enq, terms, op, k):
             for i, r in enumerate(rows)]
 
 
-def _batch(idx, specs, k):
-    res = bm25_batch(idx, [(q, t) for q, t, _o in specs], k=k,
-                     ops_by_id={q: o for q, _t, o in specs}).collect()
+def _batch(seg, specs, k):
+    res = WandEnquire(seg).get_mset_batch(
+        [(q, t) for q, t, _o in specs], k,
+        ops_by_id={q: o for q, _t, o in specs}).collect()
     out = {}
     for r in res:
         out.setdefault(r["query_id"], []).append(
@@ -51,64 +53,8 @@ SPECS = [
 ]
 
 
-def test_batch_matches_single_path(simpledata_index):
-    enq = Enquire(simpledata_index)
-    got = _batch(simpledata_index, SPECS, k=10)
-    for qid, terms, op in SPECS:
-        exp = _single(enq, terms, op, 10)
-        assert got.get(qid, []) == exp, qid
-
-
-def test_batch_k_truncates(simpledata_index):
-    got = _batch(simpledata_index, [("or3", ["paragraph", "word"], "or")],
-                 k=2)
-    assert len(got["or3"]) == 2
-    assert [r[0] for r in got["or3"]] == [1, 2]
-
-
-def test_batch_dataframe_input(simpledata_index, spark):
-    qt = spark.createDataFrame(
-        [("a", "paragraph"), ("a", "word"), ("b", "banana")],
-        "query_id string, term string")
-    res = bm25_batch(simpledata_index, qt, k=10).collect()
-    enq = Enquire(simpledata_index)
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
-    for q in by_q:
-        by_q[q].sort()
-    assert by_q["a"] == _single(enq, ["paragraph", "word"], "or", 10)
-    assert by_q["b"] == _single(enq, ["banana"], "or", 10)
-
-
-def test_batch_plan_shape(simpledata_index):
-    """The workload plan must broadcast the query side (postings are
-    never shuffled pre-aggregation) and push the rank filter map-side
-    (WindowGroupLimit — partial top-k before the query_id shuffle)."""
-    df = bm25_batch(simpledata_index,
-                    [("q1", ["paragraph", "word"]), ("q2", ["banana"])])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "WindowGroupLimit" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_batch_rejects_generalized_weights(simpledata_index):
-    from xapian_spark.query.bm25 import TfIdfWeight
-
-    with pytest.raises(ValueError):
-        bm25_batch(simpledata_index, [("q", ["paragraph"])],
-                   weight=TfIdfWeight("ntn"))
-
-
-# ---------------------------------------------------------------------------
-# batch over the chunk-encoded segment index (WandEnquire.get_mset_batch)
-# ---------------------------------------------------------------------------
-
 @pytest.fixture(scope="module")
-def seg_index(simpledata_index, tmp_path_factory, spark):
-    from xapian_spark.index.build import build_index  # noqa: F401
+def seg_index(tmp_path_factory, spark):
     from xapian_spark.index.segments import build_segments
     from xapian_spark.io.apitest import corpus_df
 
@@ -118,18 +64,25 @@ def seg_index(simpledata_index, tmp_path_factory, spark):
                           text_col="data", input_desc="apitest_simpledata")
 
 
-def test_wand_batch_matches_single_wand(seg_index):
-    from xapian_spark.query.wand import WandEnquire
+def test_batch_matches_single_path(seg_index, simpledata_index):
+    enq = Enquire(simpledata_index)
+    got = _batch(seg_index, SPECS, k=10)
+    for qid, terms, op in SPECS:
+        exp = _single(enq, terms, op, 10)
+        assert got.get(qid, []) == exp, qid
 
+
+def test_batch_k_truncates(seg_index, simpledata_index):
+    got = _batch(seg_index, [("or3", ["paragraph", "word"], "or")], k=2)
+    assert len(got["or3"]) == 2
+    assert [r[0] for r in got["or3"]] == [1, 2]
+    assert got["or3"] == _single(Enquire(simpledata_index),
+                                 ["paragraph", "word"], "or", 2)
+
+
+def test_wand_batch_matches_single_wand(seg_index):
     wq = WandEnquire(seg_index)
-    res = wq.get_mset_batch([(q, t) for q, t, _o in SPECS], 10,
-                            ops_by_id={q: o for q, _t, o in SPECS}).collect()
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
-    for q in by_q:
-        by_q[q].sort()
+    by_q = _batch(seg_index, SPECS, k=10)
     for qid, terms, op in SPECS:
         wqf = {}
         for t in terms:
@@ -139,46 +92,3 @@ def test_wand_batch_matches_single_wand(seg_index):
         exp = [(i + 1, r["doc_id"], round(r["score"], 9))
                for i, r in enumerate(rows)]
         assert by_q.get(qid, []) == exp, qid
-
-
-def test_wand_batch_matches_flat_batch(seg_index, simpledata_index):
-    """Cross-engine identity: the segment batch kernel and the flat
-    DataFrame batch produce the same docids and scores."""
-    from xapian_spark.query.wand import WandEnquire
-
-    flat = _batch(simpledata_index, SPECS, k=10)
-    wq = WandEnquire(seg_index)
-    res = wq.get_mset_batch([(q, t) for q, t, _o in SPECS], 10,
-                            ops_by_id={q: o for q, _t, o in SPECS}).collect()
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
-    for q in by_q:
-        by_q[q].sort()
-    assert by_q == {q: rows for q, rows in flat.items() if rows}
-
-
-def test_batch_dataframe_input_ops_by_id(simpledata_index, spark):
-    """ops_by_id must apply to DataFrame query inputs too (it used to
-    be silently ignored there): per-query AND override, default for
-    unlisted queries, bad op rejected."""
-    qt = spark.createDataFrame(
-        [("a", "paragraph"), ("a", "word"),
-         ("m", "paragraph"), ("m", "zzzznotaterm"),
-         ("d", "paragraph")],
-        "query_id string, term string")
-    res = bm25_batch(simpledata_index, qt, k=10,
-                     ops_by_id={"a": "and", "m": "and"}).collect()
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
-    for q in by_q:
-        by_q[q].sort()
-    enq = Enquire(simpledata_index)
-    assert by_q["a"] == _single(enq, ["paragraph", "word"], "and", 10)
-    assert "m" not in by_q  # AND with an unindexed term matches nothing
-    assert by_q["d"] == _single(enq, ["paragraph"], "or", 10)
-    with pytest.raises(ValueError, match="unsupported batch op"):
-        bm25_batch(simpledata_index, qt, ops_by_id={"a": "xor"})

@@ -30,6 +30,15 @@ def test_group_selection():
     assert parse_robots(BODY, "unknown") == parse_robots(BODY)
     assert parse_robots("") == []
     assert parse_robots("User-agent: *\nDisallow:\n") == []
+    # every matching group is combined (RFC 9309 §2.2.1), not just
+    # the first: two separate * groups, two separate exact groups
+    split = ("User-agent: *\nDisallow: /a\n\n"
+             "User-agent: googlebot\nDisallow: /g\n\n"
+             "User-agent: *\nDisallow: /b\n\n"
+             "User-agent: googlebot\nAllow: /g/ok\n")
+    assert parse_robots(split) == [(False, "/a"), (False, "/b")]
+    assert parse_robots(split, "googlebot") == [
+        (False, "/g"), (True, "/g/ok")]
 
 
 def test_pattern_regex():

@@ -7,6 +7,8 @@ Invariants:
 - WAND top-k is rank- AND score-identical to the DataFrame executor
 - pruning never changes the top-k (exhaustive == pruned), incl. on a
   Zipf-skewed corpus (soaktest-style randomized property)
+- the batch kernel (get_mset_batch) equals the executor per query,
+  also over tombstones; WAND refuses weights it cannot score
 """
 
 import numpy as np
@@ -21,6 +23,7 @@ from xapian_spark.index.segments import (
     DOCLEN_TERM, SegmentIndex, build_segments,
 )
 from xapian_spark.query import ops
+from xapian_spark.query.bm25 import BM25Weight, TfIdfWeight, TradWeight
 from xapian_spark.query.executor import Enquire
 from xapian_spark.query.wand import WandEnquire
 
@@ -265,3 +268,77 @@ def test_delete_hides_doc_in_term_filtered_view(seg_setup, tmp_path):
     after = filtered(delete_documents(seg, [victim]))
     assert after == {(t, d) for t, d in before if d != victim}
     assert len(after) < len(before)
+
+
+@pytest.mark.parametrize("weight", [
+    BM25Weight(k2=1.0), TfIdfWeight("ntn"), TradWeight(),
+], ids=["bm25_k2", "tfidf_ntn", "trad"])
+def test_wand_rejects_weights_it_cannot_score(seg_setup, weight):
+    """The kernel's sumpart reads only k1, b and min_normlen: any other
+    weight (or a k2 extra) must fail at construction, not score as
+    plain BM25 or crash inside a Python worker."""
+    _docs, seg, _flat = seg_setup
+    with pytest.raises(ValueError, match="k2=0 only"):
+        WandEnquire(seg, weight)
+
+
+# (query_id, terms, op): duplicate terms merge into wqf
+BATCH_SPECS = [
+    ("or3", ["batch", "scan", "spark"], "or"),
+    ("and2", ["batch", "window"], "and"),
+    ("wqf", ["batch", "batch", "scan"], "or"),
+    ("and_missing", ["batch", "zzzznotaterm"], "and"),
+    ("all_missing", ["zzzznotaterm"], "or"),
+]
+
+
+def _batch_pairs(seg, k):
+    res = WandEnquire(seg).get_mset_batch(
+        [(q, t) for q, t, _o in BATCH_SPECS], k,
+        ops_by_id={q: o for q, _t, o in BATCH_SPECS}).collect()
+    out = {q: [] for q, _t, _o in BATCH_SPECS}
+    for r in sorted(res, key=lambda r: (r["query_id"], r["rank"])):
+        out[r["query_id"]].append((r["doc_id"], round(r["score"], 12)))
+    return out
+
+
+def test_wand_batch_matches_executor(seg_setup):
+    """get_mset_batch == Enquire.get_mset over the flat index, per
+    query, for the wqf-merged Or/And of each query's terms."""
+    _docs, seg, flat = seg_setup
+    enq = Enquire(flat)
+    for k in (10, 3):
+        got = _batch_pairs(seg, k)
+        for qid, terms, op in BATCH_SPECS:
+            wqf = {}
+            for t in terms:
+                wqf[t] = wqf.get(t, 0) + 1
+            ch = [ops.Term(t, wqf=w) for t, w in wqf.items()]
+            node = ops.And(ch) if op == "and" else ops.Or(ch)
+            assert got[qid] == _pairs(enq.get_mset(node, 0, k)), (qid, k)
+        assert len(got["or3"]) == k
+        assert got["and_missing"] == got["all_missing"] == []
+    with pytest.raises(ValueError, match="unsupported batch op"):
+        WandEnquire(seg).get_mset_batch(
+            [("x", ["batch"])], 10, ops_by_id={"x": "xor"})
+
+
+def test_wand_batch_after_delete_matches_fresh_build(seg_setup, tmp_path):
+    """Tombstoned docs never appear in batch results, and every query
+    equals the same workload over a fresh build without those docs."""
+    from xapian_spark.index.segments import delete_documents
+
+    docs, _seg, _flat = seg_setup
+    seg = build_segments(docs, str(tmp_path / "full"), n_segments=4,
+                         analyzer="simple")
+    before = _batch_pairs(seg, 10)
+    dead = sorted({rows[0][0] for rows in before.values() if rows}
+                  | {before["or3"][-1][0]})
+    seg = delete_documents(seg, dead)
+    fresh = build_segments(docs.filter(~F.col("doc_id").isin(dead)),
+                           str(tmp_path / "fresh"), n_segments=4,
+                           analyzer="simple")
+    got = _batch_pairs(seg, 10)
+    assert got == _batch_pairs(fresh, 10)
+    assert not any(d in dead for rows in got.values() for d, _s in rows)
+    assert got["or3"] and got["and2"]

@@ -100,38 +100,18 @@ class _TermCursor:
         """(doc_ids, parts). With keep_docs (sorted), decodes only
         chunks whose docid range contains a kept doc (block skipping),
         then filters rows to kept docs."""
-        from xapian_spark.index.codec import decode_chunk
-
-        ids_l: List[np.ndarray] = []
-        w_l: List[np.ndarray] = []
-        dl_l: List[np.ndarray] = []
-        for i in range(len(self.datas)):
-            if keep_docs is not None:
-                lo = np.searchsorted(keep_docs, self.firsts[i], "left")
-                if lo >= keep_docs.size or keep_docs[lo] > self.lasts[i]:
-                    continue  # no candidate falls in this chunk's range
-            ids, wdf, dl = decode_chunk(self.datas[i])
-            if self.dead is not None:
-                m = ~_member_sorted(ids, self.dead)
-                if not m.all():
-                    ids, wdf, dl = ids[m], wdf[m], dl[m]
-                if ids.size == 0:
-                    continue
-            if keep_docs is not None:
-                m = _member_sorted(ids, keep_docs)
-                if not m.any():
-                    continue
-                ids, wdf, dl = ids[m], wdf[m], dl[m]
-            ids_l.append(ids)
-            w_l.append(wdf)
-            dl_l.append(dl)
-        if not ids_l:
-            e = np.empty(0, dtype=np.int64)
-            return e, e.astype(np.float64)
-        ids = np.concatenate(ids_l)
-        parts = _sumpart_np(self.weight, self.tw, np.concatenate(w_l),
-                            np.concatenate(dl_l), self.len_factor)
-        return ids, parts
+        datas = self.datas
+        if keep_docs is not None:
+            lo = np.searchsorted(keep_docs, self.firsts, "left")
+            hit = lo < keep_docs.size
+            hit[hit] = keep_docs[lo[hit]] <= self.lasts[hit]
+            datas = [d for d, h in zip(datas, hit) if h]
+        ids, wdf, dl = _decode_live(datas, self.dead)
+        if keep_docs is not None:
+            m = _member_sorted(ids, keep_docs)
+            ids, wdf, dl = ids[m], wdf[m], dl[m]
+        return ids, _sumpart_np(self.weight, self.tw, wdf, dl,
+                                self.len_factor)
 
 
 def _member_sorted(ids: np.ndarray, keep_sorted: np.ndarray
@@ -142,6 +122,43 @@ def _member_sorted(ids: np.ndarray, keep_sorted: np.ndarray
     m = idx < keep_sorted.size
     m[m] = keep_sorted[idx[m]] == ids[m]
     return m
+
+
+def _segment_dead(dead, pdf) -> Optional[np.ndarray]:
+    """Sorted docids tombstoned in the segment of one kernel group
+    (every row of pdf has the same seg_id), or None when there are
+    none. dead is SegmentIndex._dead_arrays(): (sorted ids, before_seg)
+    or None."""
+    if dead is None or not len(pdf):
+        return None
+    ids, before = dead
+    seg_dead = ids[before >= int(pdf["seg_id"].iloc[0])]
+    return seg_dead if seg_dead.size else None
+
+
+def _decode_live(datas, dead: Optional[np.ndarray]
+                 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode chunks in the given order → (doc_ids, wdfs, doclens),
+    dropping the docids in dead (sorted, or None)."""
+    from xapian_spark.index.codec import decode_chunk
+
+    ids_l: List[np.ndarray] = []
+    w_l: List[np.ndarray] = []
+    dl_l: List[np.ndarray] = []
+    for data in datas:
+        ids, wdf, dl = decode_chunk(data)
+        if dead is not None:
+            m = ~_member_sorted(ids, dead)
+            if not m.all():
+                ids, wdf, dl = ids[m], wdf[m], dl[m]
+        ids_l.append(ids)
+        w_l.append(wdf)
+        dl_l.append(dl)
+    if not ids_l:
+        e = np.empty(0, dtype=np.int64)
+        return e, e, e
+    return (np.concatenate(ids_l), np.concatenate(w_l),
+            np.concatenate(dl_l))
 
 
 def _segment_topk(
@@ -254,8 +271,15 @@ class WandEnquire:
 
     def __init__(self, index: SegmentIndex,
                  weight: Optional[BM25Weight] = None):
+        weight = weight or BM25Weight()
+        # the kernel's sumpart reads only k1, b and min_normlen and never
+        # adds the k2 per-document extra (BM25Weight.sumextra_col)
+        if not (isinstance(weight, BM25Weight) and weight.k2 == 0):
+            raise ValueError(
+                f"WandEnquire scores BM25Weight with k2=0 only, not "
+                f"{weight!r}; run other weights through Enquire")
         self.index = index
-        self.weight = weight or BM25Weight()
+        self.weight = weight
 
     def get_mset(self, terms: List[str], maxitems: int = 10,
                  op: str = "or", wqf: Optional[Dict[str, int]] = None,
@@ -294,13 +318,7 @@ class WandEnquire:
         def kernel(pdf):
             import pandas as pd
 
-            seg_dead = None
-            if dead is not None and len(pdf):
-                seg = int(pdf["seg_id"].iloc[0])
-                ids_, before = dead
-                seg_dead = ids_[before >= seg]  # tombstoned in this seg
-                if seg_dead.size == 0:
-                    seg_dead = None
+            seg_dead = _segment_dead(dead, pdf)
             cursors = []
             for t, g in pdf.groupby("term"):
                 cursors.append(_TermCursor(
@@ -326,14 +344,16 @@ class WandEnquire:
                        op: str = "or",
                        ops_by_id: Optional[Dict[str, str]] = None
                        ) -> DataFrame:
-        """Batch serving over the chunk-encoded index: a whole query
-        workload in ONE job.
+        """The batch serving path: a whole query workload in ONE job
+        over the chunk-encoded index.
 
         queries: iterable of (query_id, [term, ...]) — duplicate terms
-        merge into wqf; per-query OP_AND via ops_by_id.  Returns
+        merge into wqf; per-query OP_AND via ops_by_id ("or"/"and";
+        anything else raises ValueError).  Returns
         (query_id, rank, doc_id, score), identical per query to
-        get_mset (same kernels, same deterministic summation, same
-        tiebreak).
+        get_mset (same decode, same deterministic summation, same
+        tiebreak), with the same weight restriction as the constructor
+        (BM25Weight with k2=0).
 
         Trade-off vs the single-query path: block-max pruning is
         per-query, but a workload's head terms repeat across queries —
@@ -395,32 +415,12 @@ class WandEnquire:
         def kernel(pdf):
             import pandas as pd
 
-            from xapian_spark.index.codec import decode_chunk
-
-            seg_dead = None
-            if dead is not None and len(pdf):
-                seg = int(pdf["seg_id"].iloc[0])
-                ids_, before = dead
-                seg_dead = ids_[before >= seg]
-                if seg_dead.size == 0:
-                    seg_dead = None
+            seg_dead = _segment_dead(dead, pdf)
             decoded = {}
             for t, g in pdf.groupby("term"):
-                ids_l, w_l, dl_l = [], [], []
-                for data in g["data"]:
-                    ids, wdf, dl = decode_chunk(data)
-                    if seg_dead is not None:
-                        m = ~_member_sorted(ids, seg_dead)
-                        if not m.all():
-                            ids, wdf, dl = ids[m], wdf[m], dl[m]
-                    if ids.size:
-                        ids_l.append(ids)
-                        w_l.append(wdf)
-                        dl_l.append(dl)
-                if ids_l:
-                    decoded[t] = (np.concatenate(ids_l),
-                                  np.concatenate(w_l),
-                                  np.concatenate(dl_l))
+                hit = _decode_live(g["data"], seg_dead)
+                if hit[0].size:
+                    decoded[t] = hit
             q_out, d_out, s_out = [], [], []
             for qid, tws_q, n_terms, is_and in plan:
                 ids_l, parts_l = [], []
